@@ -299,6 +299,20 @@ class Tracer:
             setattr(owner, attr, orig)
         self._patches.clear()
 
+    def span_cost(self, n: int = 200) -> float:
+        """Seconds one span adds around a call: the median over ``n``
+        empty spans (its job-description calls into the driver JVM
+        included). The empty spans are not recorded."""
+        keep, self.spans = self.spans, []
+        costs = []
+        for _ in range(n):
+            t0 = time.perf_counter()
+            with self.span("tracing.empty"):
+                pass
+            costs.append(time.perf_counter() - t0)
+        self.spans = keep
+        return statistics.median(costs)
+
     def named(self, name: str) -> list[dict]:
         return [s for s in self.spans if s["name"] == name]
 
@@ -386,25 +400,26 @@ class EventLog:
         return [st for st in self.stages.values() if lo <= st["submitted"] <= hi]
 
     @staticmethod
-    def task_skew(stages: list[dict]) -> float:
-        """Mean over stages (with ≥2 tasks) of max/median task time."""
+    def _stage_skews(stages: list[dict]) -> list[float]:
+        """max/median task time of each stage with at least two tasks."""
         ratios = []
         for st in stages:
             ds = [t["dur_s"] for t in st["tasks"]]
             if len(ds) >= 2:
                 med = statistics.median(ds)
                 ratios.append(max(ds) / med if med > 0 else 1.0)
+        return ratios
+
+    @classmethod
+    def task_skew(cls, stages: list[dict]) -> float:
+        """Mean over stages (with ≥2 tasks) of max/median task time."""
+        ratios = cls._stage_skews(stages)
         return statistics.mean(ratios) if ratios else 1.0
 
-    @staticmethod
-    def counters(stages: list[dict]) -> dict:
+    @classmethod
+    def counters(cls, stages: list[dict]) -> dict:
         tasks = [t for st in stages for t in st["tasks"]]
-        per_stage = []
-        for st in stages:
-            ds = [t["dur_s"] for t in st["tasks"]]
-            if len(ds) >= 2:
-                med = statistics.median(ds)
-                per_stage.append(max(ds) / med if med > 0 else 1.0)
+        per_stage = cls._stage_skews(stages)
         return {
             "spark.shuffle_write_bytes": float(sum(t["shuffle_write"] for t in tasks)),
             "spark.spill_bytes": float(sum(t["spill"] for t in tasks)),

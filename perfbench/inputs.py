@@ -222,15 +222,28 @@ CSV_COLUMNS = [
 ]
 
 
-def _html_doc(rng: np.random.Generator, i: int) -> tuple[dict, str]:
-    """A synthetic HTML filing (``fixtures.raw_documents``) whose first
-    item body is padded by a Pareto-distributed amount of text — a
-    heavy-tailed length spread, as real filings have."""
+def html_pads(n: int) -> np.ndarray:
+    """Padding, in 129-byte paragraphs, of ``n`` HTML filings: the
+    quantiles of ``min(6 * Lomax(1.3), 400)`` at ``(k + 0.5) / n``.
+
+    Median pad about 0.5 KB; with n = 200 the longest filing carries the
+    cap (about 52 KB) and the next ones 33, 22 and 17 KB. The quantiles
+    are fixed, so every seed has the same lengths (the seed only decides
+    which filing gets which). The shape (α = 1.3, scale 6, cap 400) is an
+    assumption, not fitted to real filings: the repository holds none to
+    fit it to. It gives a long right tail, a few filings much longer
+    than the rest; ``extract.task_skew`` reports what that does to the
+    extraction stage's tasks."""
+    u = (np.arange(n) + 0.5) / n
+    return np.minimum(((1 - u) ** (-1 / 1.3) - 1) * 6, 400).astype(int)
+
+
+def _html_doc(i: int, ftype: str, pad: int) -> tuple[dict, str]:
+    """A synthetic HTML filing (``fixtures.raw_documents``, 1.6–11 KB)
+    whose first item body is padded with ``pad`` paragraphs."""
     from edgar_crawler_spark.fixtures import raw_documents as rd
 
-    ftype = ["10-K", "10-Q", "8-K"][i % 3]
     content = {"10-K": rd.make_10k, "10-Q": rd.make_10q, "8-K": rd.make_8k}[ftype](i)
-    pad = int(min(rng.pareto(1.3) * 6, 400))
     content = content.replace("</div>\n<div>", "</div>\n<div>" + rd._LOREM * pad, 1)
     cik = str(200000 + i)
     md = {
@@ -256,7 +269,7 @@ def extract_inputs(root: str, seed: int, n_plain: int, n_html: int) -> dict:
     """A raw-filings folder (``RAW/{Type}/{filename}``) plus its metadata
     CSV: the 144 minted-golden plain-text filings, ``n_plain`` further
     seed-chosen plain-text 10-K/10-Q/old-8-K filings and ``n_html`` HTML
-    filings with heavy-tailed lengths.
+    filings with heavy-tailed lengths (``html_pads``).
 
     Returns ``{raw_dir, csv, docs: [(filename, type, golden form|None)]}``;
     a golden form is named only for filings minted with the CLI's
@@ -275,12 +288,18 @@ def extract_inputs(root: str, seed: int, n_plain: int, n_html: int) -> dict:
             same = (e["remove_tables"], e["include_signature"]) == flags
             docs.append((e["metadata"], e["content"], form if same else None))
     forms = list(CORPUS_SIZES)
-    extra_ids = rng.choice(np.arange(1000, 200000), n_plain, replace=False)
-    for k, i in enumerate(extra_ids):
-        e = corpus_entry(forms[k % len(forms)], int(i))
+    # a run of consecutive ids from a seed-chosen start: the corpus
+    # generator's filing lengths vary with the id (10-Qs from 4 to 52 KB)
+    # but evenly along the ids, so any run of 200 carries the same bytes
+    # within about 1 %, where 200 random ids vary by about 6 %
+    start = int(rng.integers(1000, 200000 - n_plain))
+    for k in range(n_plain):
+        e = corpus_entry(forms[k % len(forms)], start + k)
         docs.append((e["metadata"], e["content"], None))
-    for i in rng.choice(np.arange(0, 100000), n_html, replace=False):
-        md, content = _html_doc(rng, int(i))
+    pads = rng.permutation(html_pads(n_html))
+    html_ids = rng.choice(np.arange(0, 100000), n_html, replace=False)
+    for k, (i, pad) in enumerate(zip(html_ids, pads)):
+        md, content = _html_doc(int(i), ["10-K", "10-Q", "8-K"][k % 3], int(pad))
         docs.append((md, content, None))
 
     raw_dir = os.path.join(root, "RAW")

@@ -52,12 +52,19 @@ PER_LAYER = {
     "fetch.politeness_wait_s": "s",
     "fetch.decode_ok_ratio": "ratio",
     "seen.filter_update_s": "s",
+    "seen.filter_read_s": "s",
+    "seen.maybe_ratio": "ratio",
+    "seen.fp_ratio": "ratio",
     "seen.filter_bytes": "B",
     "state.commits": "count",
     "state.commit_s": "s",
     "state.bytes_written": "B",
     "state.bytes_per_url": "B",
     "state.files": "count",
+    "near_dup.pass_s": "s",
+    "near_dup.rows_in": "count",
+    "near_dup.pairs": "count",
+    "near_dup.pairs_per_row": "ratio",
     "extract.records_s": "s",
     "extract.docs": "count",
     "extract.error_docs": "count",
@@ -84,6 +91,7 @@ PER_LAYER = {
 }
 
 SETUP_REPS = 3
+WARMUP_JOBS = 2
 OUT_DIR = os.path.join(harness.ROOT, ".perfbench_out")
 
 
@@ -97,15 +105,24 @@ def parse_args(argv):
 
 
 def _setup(wl, ctx, slots: int) -> tuple[float, float]:
-    """Prepare the inputs SETUP_REPS times (median reported), then warm
-    up. Returns (median prepare seconds, warm-up seconds)."""
+    """Prepare the inputs of ``slots`` timed jobs and WARMUP_JOBS
+    probe-size jobs SETUP_REPS times (median reported), then warm up
+    with the probe-size jobs. The first job in a session pays for Python
+    worker start and imports and runs two to three times as long as the
+    next; the jobs after it keep getting faster while the JVM compiles
+    the per-wave planning and commit paths, which run as often in a
+    small job as in a full one, so small jobs warm them as well as full
+    ones at a fraction of the time. Returns (median prepare seconds,
+    warm-up seconds)."""
     reps = []
     for _ in range(SETUP_REPS):
         t0 = time.time()
         wl.prepare(ctx, "full", slots)
+        wl.prepare(ctx, "probe", WARMUP_JOBS)
         reps.append(time.time() - t0)
     t0 = time.time()
-    wl.warmup(ctx)
+    for k in range(WARMUP_JOBS):
+        wl.job(ctx, k, "probe")
     return harness.median(reps), time.time() - t0
 
 
@@ -135,8 +152,13 @@ def run_plain(args, settings, wl, ctx_factory) -> tuple[list, dict, dict]:
 
 
 def run_traced(args, settings, wl, ctx_factory) -> tuple[list, dict, dict]:
-    """Untraced job, traced job (spans + event log), small probes of the
-    layers this workload does not reach, then one job on local[1]."""
+    """One traced job (spans + event log), small probes of the layers
+    this workload does not reach, then one job on local[1].
+
+    The tracing overhead is measured directly, as the traced job's span
+    count times the cost of one empty span: the spans cost a few
+    milliseconds in all, far below the job-to-job scatter that a traced
+    minus untraced wall difference would report."""
     import workloads
 
     event_log = os.path.join(settings.work, "eventlog")
@@ -145,16 +167,18 @@ def run_traced(args, settings, wl, ctx_factory) -> tuple[list, dict, dict]:
     spark = harness.start_session(settings, f"perfbench-{wl.name}-traced", event_log=event_log)
     start_s = time.time() - t0
     ctx = ctx_factory(spark)
-    prep_s, warm_s = _setup(wl, ctx, 3)
-    untraced = wl.job(ctx, 0)
+    prep_s, warm_s = _setup(wl, ctx, 2)
     ctx.tracer = harness.Tracer(spark)
-    traced = wl.job(ctx, 1)
+    traced = wl.job(ctx, 0)
     ctx.tracer = None
+    span_cost = traced.tracer.span_cost()
     layer = wl.spark_layer_metrics(ctx, traced)
 
     covered = set(wl.layers)
     probes = []
-    for other_cls in (workloads.FreshCrawl, workloads.ExtractFilings, workloads.CurateSql):
+    for other_cls in (
+        workloads.FreshCrawl, workloads.RecrawlDelta, workloads.ExtractFilings, workloads.CurateSql
+    ):
         if set(other_cls.layers) <= covered:
             continue
         other = other_cls()
@@ -176,7 +200,7 @@ def run_traced(args, settings, wl, ctx_factory) -> tuple[list, dict, dict]:
     layer.update(log.counters(log.select(traced.window)))
 
     ctx.spark = harness.start_session(settings, f"perfbench-{wl.name}-local1", cpus=1)
-    single = wl.job(ctx, 2)
+    single = wl.job(ctx, 1)
     ctx.spark.stop()
 
     layer.update(
@@ -184,9 +208,9 @@ def run_traced(args, settings, wl, ctx_factory) -> tuple[list, dict, dict]:
             "process.peak_rss_mb": rss.stop(),
             "session.start_s": start_s,
             "session.warmup_s": warm_s,
-            "tracing.overhead_s": traced.wall_s - untraced.wall_s,
+            "tracing.overhead_s": len(traced.tracer.spans) * span_cost,
             "baseline.local1_job_wall_s": single.wall_s,
-            "baseline.parallel_speedup": single.wall_s / untraced.wall_s,
+            "baseline.parallel_speedup": single.wall_s / traced.wall_s,
         }
     )
     os.makedirs(OUT_DIR, exist_ok=True)
@@ -194,15 +218,16 @@ def run_traced(args, settings, wl, ctx_factory) -> tuple[list, dict, dict]:
     traced.tracer.dump(spans)
     detail = {
         "spans_file": os.path.relpath(spans, harness.ROOT),
-        "untraced_job_wall_s": untraced.wall_s,
         "traced_job_wall_s": traced.wall_s,
+        "spans": len(traced.tracer.spans),
+        "span_cost_s": span_cost,
         "prepare_s": prep_s,
-        **wl.summary([untraced, traced]),
+        **wl.summary([traced]),
         # layer numbers outside the BENCHMARK.json list (recrawl_delta's
-        # seen-read, near-dup and input-shape metrics)
+        # measured input shape)
         "extra_layer_metrics": {k: v for k, v in layer.items() if k not in PER_LAYER},
     }
-    jobs = [untraced, traced, single] + [pj for _, pj in probes]
+    jobs = [traced, single] + [pj for _, pj in probes]
     return jobs, layer, detail
 
 

@@ -4,10 +4,8 @@ job's outputs.
 
 A workload provides:
 
-* ``prepare(ctx, size)`` — write the inputs (files only) for every job
-  slot; timed as part of ``setup_s``.
-* ``warmup(ctx)`` — one small job of the same shape; timed as
-  ``session.warmup_s``.
+* ``prepare(ctx, size, slots)`` — write the inputs (files only) for
+  job slots ``0 .. slots-1``; timed as part of ``setup_s``.
 * ``job(ctx, k, size)`` — job slot ``k``: returns a ``Job`` with the
   timed wall, the work items, attempted/failed operation counts and the
   output-check failures.
@@ -175,7 +173,6 @@ def _crawl_spark_metrics(ctx, job: Job) -> dict:
         "state.bytes_per_url": job.info["state_bytes"] / terminal,
         "state.files": float(job.info["state_files"]),
     }
-    m.update(_bloom_ratios(ctx, job))
     return m
 
 
@@ -191,8 +188,6 @@ def _bloom_ratios(ctx, job: Job) -> dict:
 
     fr = job.info["frontier"]
     fv0, sv0 = job.info["filter_v0"], job.info["seen_v0_version"]
-    if fv0 == 0:
-        return {"seen.maybe_ratio": 0.0, "seen.fp_ratio": 0.0}
     spark = ctx.spark
     bloom = BloomFilterTable(fr.seen_filter.table.read(spark, version=fv0), fr.bloom_shards)
     cand = (
@@ -217,20 +212,13 @@ def _bloom_ratios(ctx, job: Job) -> dict:
 
 
 def _crawl_log_metrics(job: Job, log: harness.EventLog) -> dict:
-    stages = log.select(job.window)
     fetch = [
-        s for s in stages if "MapInPandas" in s["scopes"] and s["desc"] == "frontier.run"
-    ]
-    filter_reads = [
-        s
-        for s in stages
-        if "FlatMapCoGroupsInPandas" in s["scopes"]
-        and s["desc"] in ("frontier.submit", "frontier.run")
+        s for s in log.select(job.window)
+        if "MapInPandas" in s["scopes"] and s["desc"] == "frontier.run"
     ]
     return {
         "fetch.stage_task_s": sum(t["run_s"] for s in fetch for t in s["tasks"]),
         "fetch.task_skew": log.task_skew(fetch),
-        "seen.filter_read_s": sum(s["wall_s"] for s in filter_reads),
     }
 
 
@@ -245,11 +233,10 @@ class FreshCrawl:
 
     name = "fresh_crawl"
     sizes = {
-        "full": {"n_urls": 2400, "n_hosts": 800},
+        "full": {"n_urls": 1200, "n_hosts": 400},
         "probe": {"n_urls": 120, "n_hosts": 60},
-        "warm": {"n_urls": 150, "n_hosts": 150},
     }
-    nominal_job_s = 10.0
+    nominal_job_s = 8.0
     layers = ("frontier", "fetch", "seen", "state")
 
     def prepare(self, ctx: Ctx, size: str, slots: int) -> None:
@@ -257,18 +244,14 @@ class FreshCrawl:
         for k in range(slots):
             inputs.write_parquet(
                 inputs.crawl_seeds(ctx.seed, k, sz["n_urls"], sz["n_hosts"]),
-                _fresh_dir(ctx.path(f"in-{size}", f"seeds-{k}")),
+                _fresh_dir(ctx.path(f"in-{self.name}-{size}", f"seeds-{k}")),
             )
-
-    def warmup(self, ctx: Ctx) -> None:
-        self.prepare(ctx, "warm", 1)
-        self.job(ctx, 0, "warm")
 
     def job(self, ctx: Ctx, k: int, size: str = "full") -> Job:
         from edgar_crawler_spark.frontier.frontier import CrawlFrontier
 
         spark = ctx.spark
-        seeds_path = ctx.path(f"in-{size}", f"seeds-{k}")
+        seeds_path = ctx.path(f"in-{self.name}-{size}", f"seeds-{k}")
         wd = _fresh_dir(ctx.path("jobs", f"{self.name}-{size}-{k}"))
         seeds = spark.read.parquet(seeds_path)
         seeds_pdf = seeds.select("html_index", "year", "quarter", "row_seq").toPandas()
@@ -287,8 +270,8 @@ class FreshCrawl:
             errors.append(f"admitted {admitted} of {len(seeds_pdf)} fresh seeds")
         files, nbytes = harness.dir_stats(wd, "*.parquet")
         info.update(
-            frontier=fr, admitted=admitted, seed_rows=len(seeds_pdf), filter_v0=0,
-            seen_v0_version=0, seeds_path=seeds_path, state_files=files, state_bytes=nbytes,
+            frontier=fr, admitted=admitted, seed_rows=len(seeds_pdf),
+            state_files=files, state_bytes=nbytes,
         )
         return Job(
             wall_s=t1 - t0, items=terminal, attempted=admitted,
@@ -341,7 +324,7 @@ class RecrawlDelta:
         old, job_seeds = inputs.recrawl_inputs(
             ctx.seed, sz["n_old"], sz["n_hosts"], sz["n_repeat"], sz["n_new"], slots
         )
-        base = _fresh_dir(ctx.path(f"in-{size}"))
+        base = _fresh_dir(ctx.path(f"in-{self.name}-{size}"))
         old_path = inputs.write_parquet(old, os.path.join(base, "old"))
         year = int(old.column("year")[0].as_py())
         mirrors = []
@@ -370,15 +353,12 @@ class RecrawlDelta:
         caption_near_dups_from_frontier(spark, prior)
         self._mirrors = set(mirrors)
 
-    def warmup(self, ctx: Ctx) -> None:
-        FreshCrawl().warmup(ctx)
-
     def job(self, ctx: Ctx, k: int, size: str = "full") -> Job:
         from edgar_crawler_spark.frontier.frontier import CrawlFrontier
         from edgar_crawler_spark.plans import pipeline
 
         spark = ctx.spark
-        base = ctx.path(f"in-{size}")
+        base = ctx.path(f"in-{self.name}-{size}")
         seeds_path = os.path.join(base, f"seeds-{k}")
         wd = ctx.path("jobs", f"{self.name}-{size}-{k}")
         shutil.rmtree(wd, ignore_errors=True)
@@ -470,6 +450,7 @@ class RecrawlDelta:
 
     def spark_layer_metrics(self, ctx: Ctx, job: Job) -> dict:
         m = _crawl_spark_metrics(ctx, job)
+        m.update(_bloom_ratios(ctx, job))
         rows = max(1, job.info["slice_rows"])
         m.update(
             {
@@ -484,7 +465,15 @@ class RecrawlDelta:
         return m
 
     def log_layer_metrics(self, job: Job, log: harness.EventLog) -> dict:
-        return _crawl_log_metrics(job, log)
+        filter_reads = [
+            s for s in log.select(job.window)
+            if "FlatMapCoGroupsInPandas" in s["scopes"]
+            and s["desc"] in ("frontier.submit", "frontier.run")
+        ]
+        return {
+            **_crawl_log_metrics(job, log),
+            "seen.filter_read_s": sum(s["wall_s"] for s in filter_reads),
+        }
 
     def summary(self, jobs: list[Job]) -> dict:
         return {
@@ -506,11 +495,10 @@ class ExtractFilings:
 
     name = "extract_filings"
     sizes = {
-        "full": {"n_plain": 300, "n_html": 300},
+        "full": {"n_plain": 200, "n_html": 200},
         "probe": {"n_plain": 6, "n_html": 6},
-        "warm": {"n_plain": 12, "n_html": 12},
     }
-    nominal_job_s = 10.0
+    nominal_job_s = 5.5
     layers = ("extract", "sink")
 
     def prepare(self, ctx: Ctx, size: str, slots: int) -> None:
@@ -519,13 +507,9 @@ class ExtractFilings:
         sz = self.sizes[size]
         self._inputs = getattr(self, "_inputs", {})
         self._inputs[size] = inputs.extract_inputs(
-            _fresh_dir(ctx.path(f"in-{size}")), ctx.seed, sz["n_plain"], sz["n_html"]
+            _fresh_dir(ctx.path(f"in-{self.name}-{size}")), ctx.seed, sz["n_plain"], sz["n_html"]
         )
         self._goldens = inputs.load_goldens(list(CORPUS_SIZES))
-
-    def warmup(self, ctx: Ctx) -> None:
-        self.prepare(ctx, "warm", 1)
-        self.job(ctx, 0, "warm")
 
     def job(self, ctx: Ctx, k: int, size: str = "full") -> Job:
         import spark_submit_main as cli
@@ -661,16 +645,12 @@ class CurateSql:
     checked against the queries' DuckDB oracle SQL."""
 
     name = "curate_sql"
-    sizes = {"full": {"sf": 0.1}, "probe": {"sf": 0.01}, "warm": {"sf": 0.005}}
+    sizes = {"full": {"sf": 0.1}, "probe": {"sf": 0.01}}
     nominal_job_s = 10.0
     layers = ("catalog",)
 
     def prepare(self, ctx: Ctx, size: str, slots: int) -> None:
-        inputs.sf_tables(_fresh_dir(ctx.path(f"in-{size}")), ctx.seed, self.sizes[size]["sf"])
-
-    def warmup(self, ctx: Ctx) -> None:
-        self.prepare(ctx, "warm", 1)
-        self.job(ctx, 0, "warm")
+        inputs.sf_tables(_fresh_dir(ctx.path(f"in-{self.name}-{size}")), ctx.seed, self.sizes[size]["sf"])
 
     def job(self, ctx: Ctx, k: int, size: str = "full") -> Job:
         import pyspark.sql.functions as F
@@ -679,7 +659,7 @@ class CurateSql:
         from edgar_crawler_spark.catalog import CATALOG
 
         spark = ctx.spark
-        sf_dir = ctx.path(f"in-{size}")
+        sf_dir = ctx.path(f"in-{self.name}-{size}")
         tracer = ctx.tracer
         counts, failed = {}, []
         t0 = time.time()
