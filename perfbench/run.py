@@ -65,6 +65,7 @@ PER_LAYER = {
     "near_dup.rows_in": "count",
     "near_dup.pairs": "count",
     "near_dup.pairs_per_row": "ratio",
+    "near_dup.exact_precision": "ratio",
     "extract.records_s": "s",
     "extract.docs": "count",
     "extract.error_docs": "count",

@@ -294,6 +294,12 @@ class FreshCrawl:
 # --------------------------------------------------------------------------
 
 
+# the near-dup pass's parameters (its defaults, passed explicitly so the
+# output check uses the same values)
+MIN_SIM = 0.8
+MAX_HAMMING = 6
+
+
 class RecrawlDelta:
     """The daily re-run: a large prior seen set and payload, a seed list
     that is mostly already seen, half the new rows on one hot host, then
@@ -350,7 +356,7 @@ class RecrawlDelta:
                 "image_id", "bytes", F.col("w").cast("int"), F.col("h").cast("int"),
                 "fmt", "caption", "phash", "decode_ok",
             ))
-        caption_near_dups_from_frontier(spark, prior)
+        caption_near_dups_from_frontier(spark, prior, max_hamming=MAX_HAMMING, min_sim=MIN_SIM)
         self._mirrors = set(mirrors)
 
     def job(self, ctx: Ctx, k: int, size: str = "full") -> Job:
@@ -378,7 +384,9 @@ class RecrawlDelta:
         t0 = time.time()
         admitted = fr.submit(seeds)
         fr.run()
-        pairs_df = pipeline.caption_near_dups_from_frontier(spark, wd)
+        pairs_df = pipeline.caption_near_dups_from_frontier(
+            spark, wd, max_hamming=MAX_HAMMING, min_sim=MIN_SIM
+        )
         pairs = pairs_df.toPandas() if pairs_df is not None else None
         t1 = time.time()
         tracer = ctx.tracer
@@ -388,7 +396,8 @@ class RecrawlDelta:
         errors, info = _check_crawl(spark, fr, fresh_pdf, payload_v0, seen_v0)
         if admitted != len(fresh_pdf):
             errors.append(f"admitted {admitted}, expected the {len(fresh_pdf)} unseen seeds")
-        errors += self._check_pairs(spark, wd, payload_v0, pairs)
+        pair_errors, exact_share = self._check_pairs(spark, wd, payload_v0, pairs)
+        errors += pair_errors
         files, nbytes = harness.dir_stats(wd, "*.parquet")
         info.update(
             frontier=fr, admitted=admitted, seed_rows=len(seeds_pdf), filter_v0=filter_v0,
@@ -397,6 +406,7 @@ class RecrawlDelta:
             already_seen_share=1.0 - len(fresh_pdf) / len(seeds_pdf),
             hot_host_share=float((fresh_pdf["host"] == inputs.HOT_HOST).mean()),
             pairs=0 if pairs is None else len(pairs),
+            exact_share=exact_share,
             slice_rows=info["payload_rows"],
         )
         return Job(
@@ -405,15 +415,24 @@ class RecrawlDelta:
             tracer=tracer, window=(t0, t1),
         )
 
-    def _check_pairs(self, spark, wd: str, payload_v0: int, pairs) -> list[str]:
-        """Every emitted pair must hold on an exact recheck (caption
-        token-set Jaccard ≥ min_sim, or phash Hamming ≤ max_hamming), and
-        every re-post must be paired with its new twin."""
-        from edgar_crawler_spark.frontier.state import SnapshotTable
+    def _check_pairs(self, spark, wd: str, payload_v0: int, pairs) -> tuple[list[str], float]:
+        """Every emitted pair must hold by the pass's own contract, and
+        every re-post must be paired with its new twin.
 
-        errors = []
+        The contract (``operators.dedup.IncrementalLSHIndex`` with
+        ``min_sim``, the incremental twin of ``minhash_verified_pairs``):
+        a caption pair's agreeing-seed MinHash estimate over its
+        whitespace tokens is at least ``min_sim``; a phash pair is within
+        ``max_hamming`` bits. The estimate is recomputed here from the two
+        captions alone. Returns the errors and the share of caption pairs
+        whose exact token-set Jaccard also reaches ``min_sim`` (the
+        estimator's precision, reported as ``near_dup.exact_precision``)."""
+        from edgar_crawler_spark.frontier.state import SnapshotTable
+        from edgar_crawler_spark.operators.dedup import MINHASH_K, minhash_wide
+
         if pairs is None or not len(pairs):
-            return ["near-dup pass emitted no pairs"]
+            return ["near-dup pass emitted no pairs"], 0.0
+        errors = []
         pay = SnapshotTable(os.path.join(wd, "payload")).read(spark)
         ids = set(pairs["doc_a"]) | set(pairs["doc_b"])
         rows = {
@@ -422,21 +441,32 @@ class RecrawlDelta:
             .select("image_id", "caption", "phash")
             .collect()
         }
-        bad = 0
+        captions = spark.createDataFrame(
+            [(i, r["caption"]) for i, r in rows.items() if r["caption"]], "doc_id string, text string"
+        )
+        sigs = {
+            r["doc_id"]: [r[f"m{i}"] for i in range(MINHASH_K)] for r in minhash_wide(captions).collect()
+        }
+        bad = caption_pairs = exact_ok = 0
         for a, b, via in pairs[["doc_a", "doc_b", "via"]].itertuples(index=False):
             ra, rb = rows.get(a), rows.get(b)
             if ra is None or rb is None:
                 bad += 1
                 continue
             if via == "phash":
-                ok = bin((ra["phash"] ^ rb["phash"]) & (2**64 - 1)).count("1") <= 6
+                ok = bin((ra["phash"] ^ rb["phash"]) & (2**64 - 1)).count("1") <= MAX_HAMMING
             else:
+                sa, sb = sigs.get(a), sigs.get(b)
+                ok = sa is not None and sb is not None and (
+                    sum(x == y for x, y in zip(sa, sb)) / MINHASH_K >= MIN_SIM
+                )
                 ta = set(t for t in (ra["caption"] or "").split(" ") if t)
                 tb = set(t for t in (rb["caption"] or "").split(" ") if t)
-                ok = bool(ta | tb) and len(ta & tb) / len(ta | tb) >= 0.8
+                caption_pairs += 1
+                exact_ok += bool(ta | tb) and len(ta & tb) / len(ta | tb) >= MIN_SIM
             bad += not ok
         if bad:
-            errors.append(f"{bad} of {len(pairs)} near-dup pairs fail the exact recheck")
+            errors.append(f"{bad} of {len(pairs)} near-dup pairs fail the recheck")
         new_ids = set(
             SnapshotTable(os.path.join(wd, "payload")).read_since(spark, payload_v0)
             .select("image_id").toPandas()["image_id"]
@@ -446,7 +476,7 @@ class RecrawlDelta:
         missing = sum(1 for iid in twins if (min(iid, "m" + iid), max(iid, "m" + iid)) not in found)
         if missing:
             errors.append(f"{missing} of {len(twins)} re-posted filings not paired with their twin")
-        return errors
+        return errors, exact_ok / max(1, caption_pairs)
 
     def spark_layer_metrics(self, ctx: Ctx, job: Job) -> dict:
         m = _crawl_spark_metrics(ctx, job)
@@ -458,6 +488,7 @@ class RecrawlDelta:
                 "near_dup.rows_in": float(job.info["slice_rows"]),
                 "near_dup.pairs": float(job.info["pairs"]),
                 "near_dup.pairs_per_row": job.info["pairs"] / rows,
+                "near_dup.exact_precision": job.info["exact_share"],
                 "recrawl.already_seen_share": job.info["already_seen_share"],
                 "recrawl.hot_host_share": job.info["hot_host_share"],
             }
