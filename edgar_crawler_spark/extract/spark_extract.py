@@ -5,9 +5,11 @@ extract_items.py:1252-1262, becomes partition-parallel).
 Input: a DataFrame of raw filings
     (filename, filing_type, content string + the 14 metadata columns)
 Outputs:
-  * ``extract_records``  — one row per filing with an ``items``
-    map<string,string> column (the per-filing JSON record)
-  * ``extract_items_long`` — exploded long form (filename, item_key,
+  * ``extract_json_records`` — one row per filing with the record
+    serialized as the reference writes it (the kernel's only stage)
+  * ``extract_records``  — the same rows with an ``items``
+    map<string,string> column parsed JVM-side from that JSON
+  * ``items_long`` — exploded long form (filename, item_key,
     item_text): the SQL-checkable shape (SURVEY.md §1.3).
 
 Scale notes: content strings are the payload — an explicit
@@ -31,22 +33,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import MapType, StringType, StructField, StructType
 
-RECORD_SCHEMA = StructType(
-    [
-        StructField("filename", StringType()),
-        StructField("filing_type", StringType()),
-        StructField("items", MapType(StringType(), StringType())),
-        StructField("error", StringType()),
-    ]
-)
-
 METADATA_COLS = [
     "CIK", "Company", "Type", "Date", "Period of Report", "SIC",
     "State of Inc", "State location", "Fiscal Year End", "html_index",
     "htm_file_link", "complete_text_file_link", "filename",
 ]
-
-
 
 
 #: below this many docs per partition the range-partitioner's extra
@@ -89,40 +80,24 @@ def extract_records(
     num_partitions: int | None = None,
     n_docs: int | None = None,
 ) -> DataFrame:
-    """Run the extraction kernel over (content + metadata) rows.
-    ``n_docs`` is an optional driver-known count hint for the adaptive
-    partitioner (see :func:`_size_partitioned`)."""
-    if num_partitions is None:
-        num_partitions = raw.sparkSession.sparkContext.defaultParallelism * 4
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
-
-        from edgar_crawler_spark.extract.extractor import extract_filing
-
-        sys.setrecursionlimit(30000)  # deep HTML (extract_items.py:22)
-        for pdf in batches:
-            out = {"filename": [], "filing_type": [], "items": [], "error": []}
-            for row in pdf.to_dict("records"):
-                md = {c: row.get(c) for c in METADATA_COLS}
-                try:
-                    rec = extract_filing(
-                        row["content"],
-                        md,
-                        items_to_extract=items_to_extract,
-                        remove_tables=remove_tables,
-                        include_signature=include_signature,
-                    )
-                    out["items"].append(rec if rec is not None else None)
-                    out["error"].append(None if rec is not None else "all_items_null")
-                except Exception as e:  # poisoned doc must not kill the job
-                    out["items"].append(None)
-                    out["error"].append(f"{type(e).__name__}: {e}"[:500])
-                out["filename"].append(row.get("filename"))
-                out["filing_type"].append(row.get("Type"))
-            yield pd.DataFrame(out)
-
-    return _size_partitioned(raw, num_partitions, n_docs).mapInPandas(run, RECORD_SCHEMA)
+    """Run the extraction kernel over (content + metadata) rows: one
+    row per filing with the record as an ``items`` map. The kernel runs
+    once, in :func:`extract_json_records`; the map is parsed from its
+    JSON JVM-side. ``n_docs`` is an optional driver-known count hint for
+    the adaptive partitioner (see :func:`_size_partitioned`)."""
+    return extract_json_records(
+        raw,
+        items_to_extract=items_to_extract,
+        remove_tables=remove_tables,
+        include_signature=include_signature,
+        num_partitions=num_partitions,
+        n_docs=n_docs,
+    ).select(
+        "filename",
+        "filing_type",
+        F.from_json("json", MapType(StringType(), StringType())).alias("items"),
+        "error",
+    )
 
 
 JSON_RECORD_SCHEMA = StructType(
@@ -143,7 +118,7 @@ def extract_json_records(
     num_partitions: int | None = None,
     n_docs: int | None = None,
 ) -> DataFrame:
-    """Like :func:`extract_records` but emits the record pre-serialized
+    """Run the extraction kernel; emit each record pre-serialized
     exactly as the reference writes it — ``json.dumps(indent=4,
     ensure_ascii=False)`` (extract_items.py:1184-1186) — so the
     stage-2 folder sink can write byte-identical per-filing files.

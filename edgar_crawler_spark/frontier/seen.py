@@ -31,7 +31,7 @@ import math
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -74,6 +74,23 @@ def _positions(hashes: np.ndarray, m: int, k: int) -> np.ndarray:
     return (h1[None, :] + i * h2[None, :]) % np.uint64(m)  # (k, n)
 
 
+def _or_hashes(bits: np.ndarray, hashes: np.ndarray, m: int, k: int) -> None:
+    """Set the k bit positions of every hash in ``bits`` (in place)."""
+    if len(hashes):
+        pos = _positions(hashes, m, k).ravel()
+        np.bitwise_or.at(bits, (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8))
+
+
+def _shard(hash_col: str, num_shards: int) -> Column:
+    """The shard key every build, update and membership check routes on."""
+    return F.pmod(F.col(hash_col), F.lit(num_shards)).cast("int")
+
+
+def _sharded(df: DataFrame, hash_col: str, num_shards: int) -> DataFrame:
+    """The (h, shard) rows that build and update OR into the bitsets."""
+    return df.select(F.col(hash_col).alias("h"), _shard(hash_col, num_shards).alias("shard"))
+
+
 class BloomFilterTable:
     """A DataFrame of per-shard Bloom bitsets over xxhash64(url)."""
 
@@ -97,9 +114,7 @@ class BloomFilterTable:
 
         def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
             bits = np.zeros(m // 8, dtype=np.uint8)
-            if len(pdf):
-                pos = _positions(pdf["h"].to_numpy(np.int64), m, k).ravel()
-                np.bitwise_or.at(bits, (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8))
+            _or_hashes(bits, pdf["h"].to_numpy(np.int64), m, k)
             shard = int(pdf["shard"].iloc[0]) if len(pdf) else 0
             return pd.DataFrame(
                 [
@@ -113,11 +128,11 @@ class BloomFilterTable:
                 ]
             )
 
-        sharded = seen.select(
-            F.col(hash_col).alias("h"),
-            F.pmod(F.col(hash_col), F.lit(num_shards)).cast("int").alias("shard"),
+        df = (
+            _sharded(seen, hash_col, num_shards)
+            .groupBy("shard")
+            .applyInPandas(build_shard, _BLOOM_SCHEMA)
         )
-        df = sharded.groupBy("shard").applyInPandas(build_shard, _BLOOM_SCHEMA)
         return BloomFilterTable(df, num_shards)
 
     def maybe_contains(self, candidates: DataFrame, hash_col: str = "url_hash") -> DataFrame:
@@ -143,25 +158,40 @@ class BloomFilterTable:
             out["bloom_maybe_seen"] = hit.all(axis=0).astype(bool)
             return out
 
-        shard = F.pmod(F.col(hash_col), F.lit(self.num_shards)).cast("int")
-        cand_g = candidates.withColumn("__shard", shard).groupBy("__shard")
+        cand_g = candidates.withColumn("__shard", _shard(hash_col, self.num_shards)).groupBy(
+            "__shard"
+        )
         bloom_g = self.df.groupBy("shard")
         return cand_g.cogroup(bloom_g).applyInPandas(check, out_schema)
 
 
-def guard_shard_count(table, configured: int) -> None:
-    """Validate the configured shard count against the one persisted in
-    the filter table's manifest metrics (ADVICE r02). Routing candidates
-    with a different ``num_shards`` than the bitsets were built with
-    checks hashes against the WRONG shard — silent false negatives, so
-    already-fetched URLs skip the exact recheck and are re-admitted.
-    Fail loudly instead; ``rebuild()`` is the legitimate way to change
-    the shard count (it rewrites every bitset from the seen table).
-    Tables written before this guard have no stamp — first write adds it."""
+def guard_shard_count(table, configured: int, df: DataFrame | None) -> None:
+    """Validate a persisted filter table before it is read or updated.
+
+    * Shard count (ADVICE r02): the configured count must match the one
+      persisted in the manifest metrics. Routing candidates with a
+      different ``num_shards`` than the bitsets were built with checks
+      hashes against the WRONG shard — silent false negatives, so
+      already-fetched URLs skip the exact recheck and are re-admitted.
+      Tables written before this guard have no stamp — first write
+      adds it.
+    * Layout: ``df`` (the table as read) must hold Bloom bitsets. A
+      workdir crawled by an older frontier with another filter layout
+      has a ``seenfilter`` table without a ``bitset`` column, which
+      would otherwise fail as a KeyError inside a Python worker.
+
+    Fail loudly instead; ``rebuild()`` is the legitimate way out (it
+    rewrites every bitset from the seen table)."""
+    where = getattr(table, "root", "?")
+    if df is not None and "bitset" not in df.columns:
+        raise ValueError(
+            f"persisted filter at {where} holds no Bloom bitsets (columns "
+            f"{df.columns}); rebuild() the filter from the seen table"
+        )
     stored = (table.latest_manifest().get("metrics") or {}).get("num_shards")
     if stored is not None and int(stored) != int(configured):
         raise ValueError(
-            f"persisted filter at {getattr(table, 'root', '?')} was built "
+            f"persisted filter at {where} was built "
             f"with num_shards={stored} but this instance is configured "
             f"with num_shards={configured}; construct with the stored "
             "value or rebuild() the filter"
@@ -201,23 +231,16 @@ class PersistedBloomTable:
         self.fpp = fpp
 
     def read_filter(self, spark: SparkSession) -> BloomFilterTable | None:
-        guard_shard_count(self.table, self.num_shards)
         df = self.table.read(spark)
+        guard_shard_count(self.table, self.num_shards, df)
         return BloomFilterTable(df, self.num_shards) if df is not None else None
-
-    def _sharded(self, new: DataFrame, hash_col: str) -> DataFrame:
-        return new.select(
-            F.col(hash_col).alias("h"),
-            F.pmod(F.col(hash_col), F.lit(self.num_shards)).cast("int").alias("shard"),
-        )
 
     def update(self, new: DataFrame, hash_col: str = "url_hash", metrics: dict | None = None) -> int:
         """OR the new hashes into the persisted bitsets. Touches only
         the filter table (KBs–GBs of bitsets), never the seen parquet.
         Untouched shards are carried through the cogroup unchanged."""
-        guard_shard_count(self.table, self.num_shards)
-        spark = new.sparkSession
-        cur = self.table.read(spark)
+        cur = self.table.read(new.sparkSession)
+        guard_shard_count(self.table, self.num_shards, cur)
         m0, k0 = _params(self.expected_per_shard, self.fpp)
 
         def or_in(new_pdf: pd.DataFrame, bloom_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -231,11 +254,7 @@ class PersistedBloomTable:
                 m, k, n_items = m0, k0, 0
                 bits = np.zeros(m // 8, dtype=np.uint8)
                 shard = int(new_pdf["shard"].iloc[0])
-            if len(new_pdf):
-                pos = _positions(new_pdf["h"].to_numpy(np.int64), m, k).ravel()
-                np.bitwise_or.at(
-                    bits, (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8)
-                )
+            _or_hashes(bits, new_pdf["h"].to_numpy(np.int64), m, k)
             return pd.DataFrame(
                 [
                     {
@@ -248,7 +267,7 @@ class PersistedBloomTable:
                 ]
             )
 
-        sharded = self._sharded(new, hash_col)
+        sharded = _sharded(new, hash_col, self.num_shards)
         if cur is None:
             merged = sharded.groupBy("shard").applyInPandas(
                 lambda pdf: or_in(pdf, pd.DataFrame()), _BLOOM_SCHEMA

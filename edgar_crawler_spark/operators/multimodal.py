@@ -36,6 +36,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from edgar_crawler_spark.functions.imaging import (
+    average_hash,
+    decode_image,
+    sniff_format,
+)
+
 VALIDATED_SCHEMA_FIELDS = [
     StructField("w", IntegerType()),
     StructField("h", IntegerType()),
@@ -43,6 +49,24 @@ VALIDATED_SCHEMA_FIELDS = [
     StructField("phash", LongType()),
     StructField("decode_ok", StringType()),  # ok | <error class>
 ]
+VALIDATED_COLS = [f.name for f in VALIDATED_SCHEMA_FIELDS]
+
+
+def validate_payload(data) -> tuple:
+    """(w, h, fmt, phash, decode_ok) for one binary payload — the row
+    semantics of :func:`decode_and_validate` and of the fused decode in
+    ``frontier.fetch.fetch_wave``, which both call this. A decode
+    failure is returned as its error class name, never raised.
+
+    Callers build the columns with ``dtype=object``: a list of ints
+    with a None in it would otherwise become float64 and lose phash's
+    low bits on its way to the LongType column."""
+    try:
+        data = bytes(data)
+        px = decode_image(data)
+        return px.shape[1], px.shape[0], sniff_format(data), average_hash(px), "ok"
+    except Exception as e:
+        return None, None, None, None, type(e).__name__
 
 
 def decode_and_validate(
@@ -56,7 +80,7 @@ def decode_and_validate(
     coalesces post-join shuffles by *byte size*, which strangles
     CPU-bound pandas-UDF stages — an explicit repartition is exempt
     from coalescing and pins the parallelism."""
-    passthrough = [f for f in df.schema.fields if f.name not in {x.name for x in VALIDATED_SCHEMA_FIELDS}]
+    passthrough = [f for f in df.schema.fields if f.name not in VALIDATED_COLS]
     out_schema = StructType(passthrough + VALIDATED_SCHEMA_FIELDS)
     keep = [f.name for f in passthrough]
     if num_partitions is None:
@@ -64,32 +88,11 @@ def decode_and_validate(
     df = df.repartition(num_partitions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from edgar_crawler_spark.functions.imaging import (
-            average_hash,
-            decode_image,
-            sniff_format,
-        )
-
         for pdf in batches:
-            rows = {"w": [], "h": [], "fmt": [], "phash": [], "decode_ok": []}
-            for data in pdf[bytes_col]:
-                try:
-                    data = bytes(data)
-                    px = decode_image(data)
-                    rows["w"].append(px.shape[1])
-                    rows["h"].append(px.shape[0])
-                    rows["fmt"].append(sniff_format(data))
-                    rows["phash"].append(average_hash(px))
-                    rows["decode_ok"].append("ok")
-                except Exception as e:
-                    rows["w"].append(None)
-                    rows["h"].append(None)
-                    rows["fmt"].append(None)
-                    rows["phash"].append(None)
-                    rows["decode_ok"].append(type(e).__name__)
+            vals = [validate_payload(data) for data in pdf[bytes_col]]
             out = pdf[keep].copy()
-            for k, v in rows.items():
-                out[k] = v
+            for i, name in enumerate(VALIDATED_COLS):
+                out[name] = pd.Series([v[i] for v in vals], index=out.index, dtype=object)
             yield out
 
     return df.mapInPandas(run, out_schema)

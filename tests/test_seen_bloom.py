@@ -63,26 +63,54 @@ def test_persisted_filter_shard_count_guard(spark, tmp_path):
     way to change the shard count."""
     import pytest
 
-    from edgar_crawler_spark.frontier.cuckoo import PersistedCuckooTable
     from edgar_crawler_spark.frontier.seen import PersistedBloomTable
     from edgar_crawler_spark.frontier.state import SnapshotTable
 
     hashes = spark.range(500).selectExpr("xxhash64(cast(id as string)) AS url_hash")
 
-    for cls, sub in ((PersistedBloomTable, "b"), (PersistedCuckooTable, "c")):
-        tbl = SnapshotTable(str(tmp_path / sub))
-        filt = cls(tbl, num_shards=32)
+    tbl = SnapshotTable(str(tmp_path / "b"))
+    filt = PersistedBloomTable(tbl, num_shards=32)
+    filt.update(hashes)
+    # same shard count resumes fine
+    assert PersistedBloomTable(tbl, num_shards=32).read_filter(spark) is not None
+    # drifted shard count fails loudly on both read and write paths
+    drifted = PersistedBloomTable(tbl, num_shards=16)
+    with pytest.raises(ValueError, match="num_shards"):
+        drifted.read_filter(spark)
+    with pytest.raises(ValueError, match="num_shards"):
+        drifted.update(hashes)
+    # rebuild rewrites every bitset from seen → new count is stamped
+    drifted.rebuild(hashes)
+    assert drifted.read_filter(spark) is not None
+    with pytest.raises(ValueError, match="num_shards"):
+        PersistedBloomTable(tbl, num_shards=32).read_filter(spark)
+
+
+def test_persisted_filter_rejects_non_bloom_table(spark, tmp_path):
+    """A workdir whose ``seenfilter`` table was written with another
+    per-shard layout (no ``bitset`` column) must fail with a ValueError
+    that names rebuild() on both the read and the update path, not a
+    KeyError inside a Python worker; rebuild() then recovers it."""
+    import pytest
+
+    from edgar_crawler_spark.frontier.seen import PersistedBloomTable
+    from edgar_crawler_spark.frontier.state import SnapshotTable
+
+    hashes = spark.range(500).selectExpr("xxhash64(cast(id as string)) AS url_hash")
+    tbl = SnapshotTable(str(tmp_path / "old"))
+    tbl.overwrite(
+        spark.createDataFrame(
+            [(s, bytes(16), 4, 0, False) for s in range(8)],
+            "shard int, table binary, n_buckets long, n_items long, overflow boolean",
+        ),
+        metrics={"num_shards": 8},
+    )
+    filt = PersistedBloomTable(tbl, num_shards=8)
+    with pytest.raises(ValueError, match=r"no Bloom bitsets.*rebuild\(\)"):
+        filt.read_filter(spark)
+    with pytest.raises(ValueError, match=r"no Bloom bitsets.*rebuild\(\)"):
         filt.update(hashes)
-        # same shard count resumes fine
-        assert cls(tbl, num_shards=32).read_filter(spark) is not None
-        # drifted shard count fails loudly on both read and write paths
-        drifted = cls(tbl, num_shards=16)
-        with pytest.raises(ValueError, match="num_shards"):
-            drifted.read_filter(spark)
-        with pytest.raises(ValueError, match="num_shards"):
-            drifted.update(hashes)
-        # rebuild rewrites every bitset from seen → new count is stamped
-        drifted.rebuild(hashes)
-        assert drifted.read_filter(spark) is not None
-        with pytest.raises(ValueError, match="num_shards"):
-            cls(tbl, num_shards=32).read_filter(spark)
+    filt.rebuild(hashes)
+    bloom = filt.read_filter(spark)
+    flagged = bloom.maybe_contains(hashes)
+    assert flagged.filter(~F.col("bloom_maybe_seen")).count() == 0
