@@ -19,10 +19,21 @@ State tables (SnapshotTable, Iceberg-layout):
   * ``payload``  — input_hint image+caption rows for fetched docs
   * ``seenfilter`` — the URL-seen pre-filter: one row of Bloom bits per
                    shard (seen.PersistedBloomTable). Every seen
-                   anti-join reads it first; only its "maybe seen"
-                   rows pay the exact recheck against ``seen``
+                   anti-join reads it first; the rows it flags "maybe
+                   seen" are anti-joined against a scan of the whole
+                   seen table, so the filter shrinks that join's probe
+                   side but does not spare the seen scan
 
-Crash safety — the wave commit protocol (ADVICE r01, high):
+The wave loop (``CrawlFrontier.run``): wave N+1 is prioritized and
+fetched from wave N's in-memory remainder (deferred ∪ retries) while
+wave N commits on ONE background thread; the loop barriers on wave N's
+commit before submitting wave N+1's. Fetched and failed rows leave the
+remainder by the state split, so a chained wave needs no seen
+re-filter. Only the first wave of a run reads the pending table, and it
+re-filters it against seen. Wave ids continue from the newest wave
+committed to ``seen``, so they keep increasing across reopens.
+
+Each wave commits in this order:
 
     1. log + payload      append CONCURRENTLY, tagged with a per-wave
                           commit token
@@ -31,14 +42,27 @@ Crash safety — the wave commit protocol (ADVICE r01, high):
                           adds harmless false-positive bits)
     3. seen               append, same token — THE commit that gates
                           re-dispatch
-    4. pending            overwrite
+    4. pending            overwrite with the wave's remainder
 
-A crash inside 1–2 leaves log/payload snapshots whose token never
-reached seen; ``_recover()`` (run at construction) rolls those tables
-back one snapshot — an O(1) manifest operation — and the still-intact
-pending rows are re-fetched cleanly. A crash inside 3–4 leaves stale
-pending rows that the next wave's exact seen-anti-join drops before
-dispatch. Either way: no duplicate log/payload rows, no lost URLs.
+Crash safety. Commits are strictly ordered (one commit thread, one wave
+at a time), so a crash leaves at most the newest snapshot of each table
+partial, and nothing of wave N+1 has been committed. A crash inside 1–3
+leaves log/payload snapshots whose token never reached seen;
+``_recover()`` (run at construction) rolls those tables back one
+snapshot — an O(1) manifest operation — and the still-intact pending
+rows are re-fetched cleanly. A crash inside 4 leaves stale pending rows
+that the resumed run's seen re-filter drops before dispatch. Either
+way: no duplicate log/payload rows, no lost URLs.
+
+The chained remainder's lineage passes through the nondeterministic
+fetch, so it is pinned with an eager ``localCheckpoint`` BEFORE its
+wave's commit is submitted: a lost executor then surfaces as a loud
+missing-checkpoint-block failure (recover from the committed tables,
+the normal crash path) instead of a silent re-fetch that could diverge
+from what the commit publishes. The checkpoint also cuts the plan at
+the wave boundary, which otherwise doubles with every chained fetch
+join. The loop's last allowed wave skips it: nothing reads that
+remainder but its own pending overwrite.
 """
 
 from __future__ import annotations
@@ -225,11 +249,12 @@ class CrawlFrontier:
 
     def _refiltered_pending(self) -> DataFrame | None:
         """Read the pending table and re-filter vs seen — makes
-        crash-recovery idempotent. The persisted Bloom pre-filter keeps
-        this exact (maybe → exact recheck) while the definitely-new
-        bulk skips the seen scan; filter ⊇ seen (commit protocol step
-        2-before-3) guarantees no false negative can re-admit a
-        fetched URL."""
+        crash-recovery idempotent. The plan checks every pending row
+        against the Bloom bits (a per-shard cogroup), then anti-joins
+        the "maybe seen" rows against a deduplicated scan of the whole
+        seen table; only the definitely-new rows bypass the join, not
+        the seen scan. filter ⊇ seen (commit protocol step 2-before-3)
+        guarantees no false negative can re-admit a fetched URL."""
         pending = self.pending.read(self.spark)
         if pending is None:
             return None
@@ -240,7 +265,7 @@ class CrawlFrontier:
             )
         return pending
 
-    def _dispatch_predicate(self, work: DataFrame):
+    def _dispatch_predicate(self, work: DataFrame, wave_no: int):
         """The wave-membership predicate over the prioritized frontier.
 
         Base rule: per-host quota (``host_rank <= wave_quota``) — the
@@ -256,8 +281,8 @@ class CrawlFrontier:
         * if even depth 1 exceeds the cap (hosts alone > cap), hosts are
           hashed into ~4·n/cap buckets, per-bucket row counts collected
           (tiny), and buckets are taken round-robin from a wave-rotated
-          start until the cap is reached — a bounded, rotating host
-          cohort. At least one bucket is always taken (progress
+          start (``wave_no``) until the cap is reached — a bounded,
+          rotating host cohort. At least one bucket is always taken (progress
           guarantee), so the cap is strict up to one-bucket granularity
           (expected bucket size ≈ cap/4). No starvation: unserved hosts
           stay pending and the start bucket rotates each wave.
@@ -295,7 +320,7 @@ class CrawlFrontier:
             .agg(F.count("*").alias("n"))
             .collect()
         }
-        start = (len(self.metrics) + 1) % n_buckets  # rotate per wave
+        start = wave_no % n_buckets
         chosen, cum = [], 0
         for i in range(n_buckets):
             b = (start + i) % n_buckets
@@ -310,7 +335,7 @@ class CrawlFrontier:
                 break
         return (F.col("host_rank") == 1) & bucket.isin(chosen)
 
-    def _fetch_phase(self, pending: DataFrame) -> dict:
+    def _fetch_phase(self, pending: DataFrame, wave_no: int) -> dict:
         """Prioritize, split dispatch/deferred, run the fetch, and
         materialize per-state counts. Returns the wave context dict
         (results/work stay persisted until the caller releases them)."""
@@ -319,7 +344,7 @@ class CrawlFrontier:
         # cache the deferred side re-scans pending and re-runs the
         # window when the next-pending snapshot is written
         work = with_priority(pending).persist()
-        dispatch_pred = self._dispatch_predicate(work)
+        dispatch_pred = self._dispatch_predicate(work, wave_no)
         dispatch = work.filter(dispatch_pred)
         deferred = work.filter(~dispatch_pred).drop(
             "form_type_rank", "priority", "host_rank"
@@ -367,13 +392,10 @@ class CrawlFrontier:
         }
 
     def _commit_phase(self, wave_no: int, ctx: dict) -> dict:
-        """The ordered wave commit protocol (module docstring):
-        log+payload concurrently (both tagged with this wave's commit
-        token), then the Bloom filter OR-in, then seen strictly last
-        among the result tables (seen is what gates re-dispatch —
-        committing it only after log/payload exist means a crash can
-        never drop a fetched URL from the log), then the pending
-        overwrite."""
+        """Commit one wave in the protocol's order (module docstring).
+        seen is what gates re-dispatch, so it lands only after log,
+        payload and the filter: a crash can never drop a fetched URL
+        from the log."""
         results = ctx["results"]
         n_dispatched = ctx["n_dispatched"]
         fetched = results.filter(F.col("state") == "fetched")
@@ -447,129 +469,59 @@ class CrawlFrontier:
         return m
 
     def step(self) -> dict | None:
-        """Run one wave synchronously; returns its metrics dict, or
-        None if drained."""
-        pending = self._refiltered_pending()
-        if pending is None or pending.isEmpty():
-            # cheap limit-1 probe: a drained frontier costs one tiny
-            # job, not a full (empty) fetch wave
-            return None
-        ctx = self._fetch_phase(pending)
-        if ctx["n_dispatched"] == 0:
-            ctx["results"].unpersist()
-            # unconditional: an empty deferred set must still clear the
-            # stale pending snapshot (ADVICE r01 nit)
-            self.pending.overwrite(ctx["deferred"])
-            ctx["work"].unpersist()
-            return None
-        m = self._commit_phase(len(self.metrics) + 1, ctx)
+        """Run one wave; returns its metrics dict, or None if drained."""
+        out = self.run(max_waves=1)
+        return out[0] if out else None
+
+    def _last_wave(self) -> int:
+        """The newest wave id committed to seen (0 before the first)."""
+        return max(
+            ((m.get("metrics") or {}).get("wave", 0) for m in self.seen.history()),
+            default=0,
+        )
+
+    def _finish(self, commit_fut, ctx: dict) -> dict:
+        """Barrier on a wave's commit, release its caches, and compact
+        when the wave id is a multiple of ``compact_every``."""
+        m = commit_fut.result()
         ctx["results"].unpersist()
         ctx["work"].unpersist()
+        if self.compact_every and m["wave"] % self.compact_every == 0:
+            self.compact()
         return m
 
-    def run(
-        self,
-        max_waves: int = 100,
-        pipeline: bool | None = None,
-        pipeline_eager_checkpoint: bool | None = None,
-    ) -> list[dict]:
-        """Drain the frontier. With ``pipeline=True``, wave
-        N+1's fetch overlaps wave N's commits: commits run on ONE
-        background thread (strictly ordered — only the latest snapshot
-        can ever be partial, which is what ``_recover`` assumes) while
-        the main thread prioritizes and fetches the next wave from the
-        in-memory ``deferred ∪ retries`` remainder. Chained waves skip
-        the seen re-filter — fetched rows are excluded from the
-        remainder by construction — and the pending-table overwrite
-        stays the last step of each wave's commit, so a crash anywhere
-        leaves a pending snapshot whose stale rows the resume-time
-        re-filter drops. Crash-safety is identical to step()-by-step
-        execution; only idle driver time is removed.
-
-        The chained remainder's lineage passes through wave N's
-        nondeterministic fetch, so it must never be silently
-        recomputable: each wave boundary cuts lineage with a
-        ``localCheckpoint``.  On a local master the checkpoint is LAZY
-        (materialized by wave N+1's first job — cache eviction spills
-        to disk locally and never recomputes, so laziness is free); on
-        a multi-executor cluster it is EAGER — the remainder's rows are
-        pinned in checkpoint blocks *before* the commit thread starts
-        publishing wave N, so a lost executor surfaces as a loud
-        missing-checkpoint-block failure (recover by re-running from
-        the committed tables, the normal crash path) instead of a
-        silent re-fetch that could diverge from what was committed
-        (the r02 ADVICE hazard that used to gate pipelining to local
-        masters — gate now dropped).  ``pipeline_eager_checkpoint``
-        overrides the master-based default, mainly for tests."""
-        if pipeline is None:
-            pipeline = True
-        if pipeline_eager_checkpoint is None:
-            pipeline_eager_checkpoint = not self.spark.sparkContext.master.startswith(
-                "local"
-            )
-        if not pipeline:
-            out = []
-            for _ in range(max_waves):
-                m = self.step()
-                if m is None:
-                    break
-                out.append(m)
-                if self.compact_every and m["wave"] % self.compact_every == 0:
-                    self.compact()
-            return out
-
+    def run(self, max_waves: int = 100) -> list[dict]:
+        """Run waves until one dispatches nothing or ``max_waves`` have
+        run; returns the metrics dict of every wave committed. Wave
+        N+1's fetch overlaps wave N's commit (module docstring)."""
         from concurrent.futures import ThreadPoolExecutor
 
         out: list[dict] = []
+        wave_no = self._last_wave()
         pending = self._refiltered_pending()
-        commit_fut = None
-        prev_ctx = None
+        inflight = None  # (commit future, wave context) of the last wave
         with ThreadPoolExecutor(max_workers=1) as commit_pool:
-            for _ in range(max_waves):
+            for i in range(max_waves):
                 if pending is None:
                     break
-                ctx = self._fetch_phase(pending)
-                # wave N's commits (if any) ran while the fetch above
-                # executed; barrier on them before committing this wave
-                if commit_fut is not None:
-                    out.append(commit_fut.result())
-                    prev_ctx["results"].unpersist()
-                    prev_ctx["work"].unpersist()
-                    if self.compact_every and out[-1]["wave"] % self.compact_every == 0:
-                        self.compact()
+                wave_no += 1
+                ctx = self._fetch_phase(pending, wave_no)
+                if inflight is not None:
+                    out.append(self._finish(*inflight))
+                    inflight = None
                 if ctx["n_dispatched"] == 0:
+                    # an empty deferred set must still clear the stale
+                    # pending snapshot
                     self.pending.overwrite(ctx["deferred"])
                     ctx["results"].unpersist()
                     ctx["work"].unpersist()
-                    commit_fut, prev_ctx = None, None
                     break
-                # safe to read len(metrics): the barrier above guarantees
-                # the previous _commit_phase (which appends) has finished
-                wave_no = len(self.metrics) + 1
-                # chain in-memory: fetched rows are already excluded
-                # from next_pending by the state split. localCheckpoint
-                # truncates the logical plan at the wave boundary —
-                # without it the fetch join doubles the chained plan
-                # every wave (exponential analysis cost, plan-string
-                # OOM after ~30 waves). Lazy locally (materialized by
-                # wave N+1's counts job, before wave N's caches
-                # release); EAGER on a cluster — and then it MUST
-                # materialize BEFORE the commit is submitted: if the
-                # commit and the checkpoint could both recompute a lost
-                # fetch partition concurrently, two independent
-                # re-fetches could publish diverging results. Order:
-                # pin the remainder first, publish second.
-                if pipeline_eager_checkpoint:
+                if i + 1 < max_waves:
+                    # pin the remainder first, publish second
                     pending = ctx["next_pending"].localCheckpoint(eager=True)
-                    commit_fut = commit_pool.submit(self._commit_phase, wave_no, ctx)
-                else:
-                    commit_fut = commit_pool.submit(self._commit_phase, wave_no, ctx)
-                    pending = ctx["next_pending"].localCheckpoint(eager=False)
-                prev_ctx = ctx
-            if commit_fut is not None:
-                out.append(commit_fut.result())
-                prev_ctx["results"].unpersist()
-                prev_ctx["work"].unpersist()
+                inflight = (commit_pool.submit(self._commit_phase, wave_no, ctx), ctx)
+            if inflight is not None:
+                out.append(self._finish(*inflight))
         return out
 
     # ---- outputs -----------------------------------------------------------

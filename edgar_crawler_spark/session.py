@@ -16,6 +16,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def _default_driver_mem() -> str:
+    """16g, capped at half of physical RAM: the JVM grows its heap
+    lazily toward the cap, so a cap near or past the machine's memory
+    gets the driver killed by the kernel instead of collected."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(512, min(16 * 1024, phys_mb // 2))}m"
+
+
 def get_spark(
     app_name: str = "edgar-crawler-spark",
     master: str | None = None,
@@ -50,7 +58,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Keep scan splits big enough to amortize task overhead at scale.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")

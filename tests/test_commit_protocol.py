@@ -1,6 +1,9 @@
-"""Wave commit-protocol crash safety (ADVICE r01 high), incremental
-Bloom maintenance (VERDICT r01 item 3), and the (url_hash,
-canonical_url) fetch join-back key (VERDICT r01 item 4)."""
+"""Wave commit-protocol crash safety (ADVICE r01 high), wave ids
+across reopens, incremental Bloom maintenance (VERDICT r01 item 3),
+and the (url_hash, canonical_url) fetch join-back key (VERDICT r01
+item 4)."""
+
+import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -25,81 +28,76 @@ def _expected_order(seed):
     )
 
 
-def test_crash_between_log_and_seen_commits_recovers_exactly(spark, tmp_path):
-    """Kill after log+payload land but BEFORE seen: on resume the
-    partial wave is rolled back and re-fetched — final log has every
-    URL exactly once, in exact reference order."""
+# boundary → (SnapshotTable method, table dir, tables the reopen must
+# roll back). log, payload and the filter commit concurrently and the
+# barrier waits for all three, so the two that did not crash land.
+BOUNDARIES = {
+    "log": ("append", "log", {"payload"}),
+    "payload": ("append", "payload", {"log"}),
+    "filter": ("overwrite", "seenfilter", {"log", "payload"}),
+    "seen": ("append", "seen", {"log", "payload"}),
+    "pending": ("overwrite", "pending", set()),
+}
+
+
+@pytest.mark.parametrize("boundary", list(BOUNDARIES))
+def test_crash_at_commit_boundary_recovers_exactly(spark, tmp_path, monkeypatch, boundary):
+    """Crash wave 2's commit of one table inside a multi-wave run() —
+    wave 2 was fetched from wave 1's chained, un-refiltered remainder,
+    and wave 3 is in flight. Reopening rolls back exactly the orphaned
+    log/payload snapshots, and a resumed run() ends with every URL
+    logged once in reference order, one payload row per fetched URL,
+    and a seen set equal to the log's URLs."""
+    method, table, rolled_back = BOUNDARIES[boundary]
     wd = str(tmp_path / "wd")
-    fr = CrawlFrontier(spark, wd, wave_quota=3)  # several waves
-    seed = seed_index_df(spark, N)
+    root = os.path.join(wd, table)
+    orig = getattr(SnapshotTable, method)
+
+    def crashing(self, df, metrics=None, lineage=None, partition_by=None):
+        if self.root == root and (metrics or {}).get("wave") == 2:
+            raise _Boom(f"crash at wave 2's {boundary} commit")
+        return orig(self, df, metrics, lineage, partition_by)
+
+    seed = seed_index_df(spark, 60, n_hosts=4, hot_host=False)
+    fr = CrawlFrontier(spark, wd, wave_quota=5)  # 3 waves of 20
     fr.submit(seed)
-    fr.step()  # wave 1 commits cleanly
+    monkeypatch.setattr(SnapshotTable, method, crashing)
+    with pytest.raises(_Boom):
+        fr.run()
+    monkeypatch.undo()
+    assert [m["wave"] for m in fr.metrics] == [1]
 
-    orig_append = SnapshotTable.append
-
-    def exploding_seen_append(self, df, metrics=None, lineage=None):
-        if self.root == fr.seen.root and "commit_token" in (metrics or {}):
-            raise _Boom("crash before seen commit")
-        return orig_append(self, df, metrics, lineage)
-
-    SnapshotTable.append = exploding_seen_append
-    try:
-        with pytest.raises(_Boom):
-            fr.step()  # wave 2: log+payload commit, seen crashes
-    finally:
-        SnapshotTable.append = orig_append
-
-    log_v_partial = fr.log.current_version()
-    # restart: a fresh frontier on the same workdir must roll back the
-    # orphaned log+payload snapshots (token never reached seen)
-    fr2 = CrawlFrontier(spark, wd, wave_quota=3)
-    assert fr2.log.current_version() == log_v_partial + 1  # rollback commit
-    assert fr2.log.latest_manifest()["mode"] == "rollback"
-    fr2.run(max_waves=500)
+    fr2 = CrawlFrontier(spark, wd, wave_quota=5)
+    assert {
+        t for t in ("log", "payload")
+        if getattr(fr2, t).latest_manifest()["mode"] == "rollback"
+    } == rolled_back
+    fr2.run()
 
     log = fr2.fetch_log().toPandas()
-    assert len(log) == N
-    assert log["canonical_url"].duplicated().sum() == 0
     assert list(log["html_index"]) == _expected_order(seed)
-    # payload was rolled back too — exactly one payload row per URL
+    fetched_ids = log.loc[log.state == "fetched", "canonical_url"].str.extract(
+        r"/(\d{10}-\d{2}-\d{6})(?:-index\.html)?$"
+    )[0]
     pay = fr2.payload.read(spark).toPandas()
-    assert len(pay) == N
+    assert sorted(pay["image_id"]) == sorted(fetched_ids)
+    seen = fr2.seen_set().toPandas()["canonical_url"]
+    assert len(seen) == seen.nunique()
+    assert set(seen) == set(log["canonical_url"])
 
 
-def test_crash_between_seen_and_pending_recovers_exactly(spark, tmp_path):
-    """Kill after seen commit but BEFORE the pending overwrite: stale
-    pending rows are dropped by the exact seen re-filter — no
-    duplicate log rows on resume."""
+def test_wave_ids_continue_after_reopen(spark, tmp_path):
+    """A run on a reopened workdir numbers its waves after the newest
+    wave committed to seen, not from 1 again."""
     wd = str(tmp_path / "wd")
-    fr = CrawlFrontier(spark, wd, wave_quota=3)
-    seed = seed_index_df(spark, N)
-    fr.submit(seed)
+    fr = CrawlFrontier(spark, wd, wave_quota=5)  # 2 waves of 20
+    fr.submit(seed_index_df(spark, 40, n_hosts=4, hot_host=False))
+    assert fr.step()["wave"] == 1
 
-    orig_overwrite = SnapshotTable.overwrite
-    calls = {"n": 0}
-
-    def exploding_pending_overwrite(self, df, metrics=None, lineage=None):
-        if self.root == fr.pending.root:
-            calls["n"] += 1
-            if calls["n"] == 2:  # crash on wave 2's overwrite
-                raise _Boom("crash before pending overwrite")
-        return orig_overwrite(self, df, metrics, lineage)
-
-    SnapshotTable.overwrite = exploding_pending_overwrite
-    try:
-        fr.step()
-        with pytest.raises(_Boom):
-            fr.step()
-    finally:
-        SnapshotTable.overwrite = orig_overwrite
-
-    fr2 = CrawlFrontier(spark, wd, wave_quota=3)
-    assert fr2.log.latest_manifest()["mode"] != "rollback"  # nothing partial
-    fr2.run(max_waves=500)
+    fr2 = CrawlFrontier(spark, wd, wave_quota=5)
+    assert [m["wave"] for m in fr2.run()] == [2]
     log = fr2.fetch_log().toPandas()
-    assert len(log) == N
-    assert log["canonical_url"].duplicated().sum() == 0
-    assert list(log["html_index"]) == _expected_order(seed)
+    assert log.groupby("wave").size().to_dict() == {1: 20, 2: 20}
 
 
 def test_bloom_incremental_no_full_rebuild(spark, tmp_path):

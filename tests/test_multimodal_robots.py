@@ -405,7 +405,7 @@ def test_robots_gate_through_frontier(spark, tmp_path):
         spark, str(tmp_path / "w"), robots_fetcher=robots, max_attempts=1
     )
     fr.submit(seed_index_df(spark, 40, n_hosts=4, hot_host=False))
-    fr.run(pipeline=False)
+    fr.run()
     log = fr.fetch_log().toPandas()
     assert len(log) == 40
     blocked = log[log.host == "host0.test"]

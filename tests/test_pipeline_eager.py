@@ -1,9 +1,8 @@
-"""Pipelined-mode lineage hardening (VERDICT r03 item 8): the chained
+"""Wave-loop lineage hardening (VERDICT r03 item 8): the chained
 remainder must never be recomputable through the nondeterministic fetch.
-With an EAGER wave-boundary localCheckpoint (the non-local-master
-default, now that the local-only pipeline gate is dropped), losing every
-upstream cache mid-wave neither re-runs the fetch nor changes what the
-commit protocol publishes."""
+With the eager wave-boundary localCheckpoint, losing every upstream
+cache mid-wave neither re-runs the fetch nor changes what the commit
+protocol publishes."""
 
 import os
 
@@ -36,7 +35,7 @@ def test_eager_checkpoint_pins_remainder_against_cache_loss(spark, tmp_path):
     fr.submit(seed_index_df(spark, 60, n_hosts=4, hot_host=False))
 
     pending = fr._refiltered_pending()
-    ctx = fr._fetch_phase(pending)
+    ctx = fr._fetch_phase(pending, 1)
     pend = ctx["next_pending"].localCheckpoint(eager=True)
 
     calls_after_fetch = sum(1 for _ in open(count_file))
@@ -55,31 +54,35 @@ def test_eager_checkpoint_pins_remainder_against_cache_loss(spark, tmp_path):
 
 
 def test_pipeline_eager_equals_step_mode(spark, tmp_path):
-    """End-to-end: pipeline=True with the eager (cluster-default)
-    checkpoint must publish exactly what step mode publishes — same
-    crawl order, same seen set — with every URL fetched exactly once."""
+    """End-to-end: one run() (each wave fetched from the checkpointed
+    in-memory remainder) must publish exactly what a loop of step()
+    calls publishes (each wave re-reads and re-filters the pending
+    table) — same crawl order, same seen set — with every URL fetched
+    exactly once."""
     n = 60
 
-    def run_mode(sub: str, **kwargs):
+    def run_mode(sub: str, drive):
         count_file = str(tmp_path / f"calls_{sub}.txt")
         wd = str(tmp_path / sub)
         fr = CrawlFrontier(
             spark, wd, fetcher=_counting_fetcher(count_file), wave_quota=7
         )
         fr.submit(seed_index_df(spark, n, n_hosts=4, hot_host=False))
-        fr.run(**kwargs)
+        drive(fr)
         log = fr.fetch_log().toPandas()
         seen = {r.url_hash for r in fr.seen_set().collect()}
         calls = sum(1 for _ in open(count_file)) if os.path.exists(count_file) else 0
         return log, seen, calls
 
-    log_e, seen_e, calls_e = run_mode(
-        "eager", pipeline=True, pipeline_eager_checkpoint=True
-    )
-    log_s, seen_s, calls_s = run_mode("step", pipeline=False)
+    def step_loop(fr):
+        while fr.step():
+            pass
 
-    assert calls_e == calls_s == n  # exactly-once fetch in both modes
+    log_e, seen_e, calls_e = run_mode("run", CrawlFrontier.run)
+    log_s, seen_s, calls_s = run_mode("step", step_loop)
+
+    assert calls_e == calls_s == n  # exactly-once fetch both ways
     assert seen_e == seen_s and len(seen_e) == n
-    order_cols = ["year", "quarter", "row_seq"]
+    order_cols = ["year", "quarter", "row_seq", "wave"]
     assert log_e[order_cols].values.tolist() == log_s[order_cols].values.tolist()
     assert (log_e["state"] == "fetched").all()

@@ -4,6 +4,7 @@ while preserving per-host politeness order (each wave dispatches a
 prefix of every participating host's priority queue)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from edgar_crawler_spark.fixtures.seed_index import seed_index_df
 from edgar_crawler_spark.frontier.frontier import CrawlFrontier
@@ -18,7 +19,7 @@ def test_wave_sizes_bounded_and_order_preserved(spark, tmp_path):
         max_wave_rows=cap,
     )
     fr.submit(seed_index_df(spark, n, n_hosts=n_hosts, hot_host=False))
-    waves = fr.run(pipeline=False)
+    waves = fr.run()
     assert sum(w["dispatched"] for w in waves) == n  # full drain
     assert all(w["dispatched"] <= cap for w in waves)
     assert len(waves) >= -(-n // cap)
@@ -32,16 +33,26 @@ def test_wave_sizes_bounded_and_order_preserved(spark, tmp_path):
         assert pri == sorted(pri)
 
 
-def test_host_cohort_rotation_when_hosts_exceed_cap(spark, tmp_path):
+@pytest.mark.parametrize(
+    "n_hosts, cap",
+    [(64, 16), (32, 8)],  # rank-1 depth alone is 4× the cap
+    ids=["one_url_per_host", "two_urls_per_host"],
+)
+def test_host_cohort_rotation_when_hosts_exceed_cap(spark, tmp_path, n_hosts, cap):
     """More hosts than the cap: each wave serves a rotating host cohort
-    of bounded size; every URL is still fetched exactly once."""
-    n, n_hosts, cap = 64, 64, 16  # rank-1 depth alone is 4× the cap
+    of bounded size; every URL is still fetched exactly once. Wave 2 is
+    dispatched while wave 1 still commits and must still start its
+    cohort from the next bucket — with 2 URLs per host, a stale start
+    re-serves wave 1's hosts their second URLs."""
+    n = 64
     fr = CrawlFrontier(
         spark, str(tmp_path / "w"), wave_quota=10, max_wave_rows=cap
     )
     fr.submit(seed_index_df(spark, n, n_hosts=n_hosts, hot_host=False))
-    waves = fr.run(pipeline=False, max_waves=100)
+    waves = fr.run()
     assert sum(w["dispatched"] for w in waves) == n
     assert all(w["dispatched"] <= cap for w in waves)
     log = fr.fetch_log().toPandas()
     assert log.row_seq.nunique() == n and (log.state == "fetched").all()
+    hosts = log.groupby("wave")["host"].apply(frozenset)
+    assert hosts[1] != hosts[2]
